@@ -499,8 +499,12 @@ def q_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("ts").over(w)
+    # exact microsecond gap, as the oracle's fractional epoch(): casting to
+    # whole seconds first misjudges gaps within a second of the threshold
     new_session = F.when(
-        prev.isNull() | ((F.col("ts").cast("long") - prev.cast("long")) > 1800), 1
+        prev.isNull()
+        | ((F.unix_micros(F.col("ts")) - F.unix_micros(prev)) > 1800 * 1_000_000),
+        1,
     ).otherwise(0)
     return (
         ev.select("user_id", new_session.alias("new_session"))

@@ -9,12 +9,17 @@ Layout — **hash-bucketed by key** so per-batch IO is bounded by the
 batch, not by total state: each table is a parquet directory partitioned
 by ``bkt = pmod(xxhash64(key), n_buckets)``.  A micro-batch merge
 
-  1. pre-aggregates the batch per key and computes each key's bucket;
+  1. pre-aggregates the batch per key, computes each key's bucket and
+     persists the result, so the batch's upstream plan (the detector's
+     Python state machine, the collector's file scan) runs once even
+     though steps 2 and 3 are two Spark actions;
   2. collects the distinct dirty bucket ids (≤ n_buckets ints — the only
      driver-side data);
   3. reads ONLY the dirty buckets of the current table (static partition
-     pruning on ``bkt``), merges, and rewrites ONLY those bucket
-     directories, each swapped in with an atomic rename.
+     pruning on ``bkt``), shuffles the merged rows by ``bkt`` (the fold's
+     per-key aggregation reuses that exchange) and rewrites ONLY those
+     bucket directories — one parquet file each — each swapped in with
+     an atomic rename.
 
 At 100 TB of state with n_buckets sized so a bucket fits an executor,
 a micro-batch touching K keys rewrites O(K/n_buckets · state) bytes —
@@ -75,8 +80,10 @@ class ServingTables:
 
     def read(self, name: str) -> DataFrame | None:
         """Current table as a DataFrame (partition-discovered ``bkt``
-        column included).  None before the first micro-batch."""
-        self._recover(name)
+        column included).  None before the first micro-batch.  Readers
+        never repair the directory: recovery is the single writer's job
+        (``_merge_buckets``), so a read never moves or deletes the files
+        of a merge in flight."""
         path = self._path(name)
         if not os.path.exists(path) or not any(
             e.startswith("bkt=") for e in os.listdir(path)
@@ -88,8 +95,8 @@ class ServingTables:
         """Repair a crash mid-swap.  The swap is two renames
         (dst→``.old``, then src→dst); a crash between them leaves the
         bucket directory absent with its pre-crash state only in the
-        ``.old`` snapshot.  Restoring that snapshot here — before any
-        read or merge — makes the subsequent epoch replay merge the
+        ``.old`` snapshot.  Restoring that snapshot here — at the start
+        of every merge — makes the subsequent epoch replay merge the
         delta against the true prior state, which is what the
         exactly-once claim in the module docstring requires.  An
         ``.old`` dir whose bucket DOES exist means the swap completed
@@ -137,26 +144,35 @@ class ServingTables:
         delta down to one row per key (it sees only dirty-bucket rows).
         """
         self._recover(name)  # restore any crash-orphaned .old buckets first
-        delta = delta.withColumn("bkt", _bucket(F.col(key), self.n_buckets))
-        dirty = sorted(
-            r.bkt for r in delta.select("bkt").distinct().collect()
-        )  # ≤ n_buckets ints — the only driver-side data
-        if epoch_id is not None:
-            dirty = [b for b in dirty if self._bucket_epoch(name, b) < epoch_id]
-        if not dirty:
-            return  # fully replayed micro-batch
-        delta = delta.filter(F.col("bkt").isin(dirty))
-        current = self.read(name)
-        if current is not None:
-            # static partition pruning: only dirty bucket dirs are read
-            merged = current.filter(F.col("bkt").isin(dirty)).unionByName(delta)
-        else:
-            merged = delta
-        compacted = fold(merged)
+        # the foreachBatch frame feeds two actions (dirty-bucket collect,
+        # bucket write); materialise it once so the upstream plan — the
+        # detector's Python state machine, the collector's file scan —
+        # runs once per micro-batch
+        cached = delta.withColumn("bkt", _bucket(F.col(key), self.n_buckets)).persist()
+        try:
+            dirty = sorted(
+                r.bkt for r in cached.select("bkt").distinct().collect()
+            )  # ≤ n_buckets ints — the only driver-side data
+            if epoch_id is not None:
+                dirty = [b for b in dirty if self._bucket_epoch(name, b) < epoch_id]
+            if not dirty:
+                return  # fully replayed micro-batch
+            delta = cached.filter(F.col("bkt").isin(dirty))
+            current = self.read(name)
+            if current is not None:
+                # static partition pruning: only dirty bucket dirs are read
+                merged = current.filter(F.col("bkt").isin(dirty)).unionByName(delta)
+            else:
+                merged = delta
+            # one shuffle by bucket: the fold's groupBy(key, "bkt") reuses
+            # it, and each bucket lands in one write task → one file each
+            compacted = fold(merged.repartition("bkt"))
 
-        # write dirty buckets to a tmp dir, then atomic-rename each one
-        tmp = self._path(f".{name}.{uuid.uuid4().hex}")
-        compacted.write.mode("overwrite").partitionBy("bkt").parquet(tmp)
+            # write dirty buckets to a tmp dir, then atomic-rename each one
+            tmp = self._path(f".{name}.{uuid.uuid4().hex}")
+            compacted.write.mode("overwrite").partitionBy("bkt").parquet(tmp)
+        finally:
+            cached.unpersist()
         final = self._path(name)
         os.makedirs(final, exist_ok=True)
         for b in dirty:

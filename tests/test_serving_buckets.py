@@ -179,3 +179,77 @@ def test_flags_sink_bucketed_latest_fold(spark, tmp_path):
     sink(mk([("a", True, 0, 3)]), 1)
     assert serving.check("a")["above_threshold"] is False
     assert serving.check("b")["above_threshold"] is True
+
+
+def _counted(spark, frame, col, dtype):
+    """``frame`` with ``col`` recomputed through a Python UDF that bumps an
+    accumulator once per row evaluated — counts how often the upstream
+    plan of a sink's batch runs."""
+    from pyspark.sql import functions as F
+
+    acc = spark.sparkContext.accumulator(0)
+
+    def ident(v):
+        acc.add(1)
+        return v
+
+    return frame.withColumn(col, F.udf(ident, dtype)(F.col(col))), acc
+
+
+def test_sinks_evaluate_their_batch_once(spark, tmp_path):
+    """The dirty-bucket collect and the bucket write must share one
+    evaluation of the micro-batch: upstream of a real sink sits the
+    detector's Python state machine or the collector's file scan."""
+    serving = ServingTables(spark, str(tmp_path / "serving"))
+    rows = [(f"w{i}", float(i), i) for i in range(40)]
+    # counted on the key: column pruning cannot drop it from either action
+    batch, acc = _counted(spark, _mk_batch(spark, rows), "wallet_id", "string")
+    serving.balance_sink()(batch, 0)
+    assert acc.value == len(rows)
+
+    flags = spark.createDataFrame(
+        [(f"w{i}", i % 2 == 0, 100 + i, i) for i in range(40)],
+        "wallet_id string, flag_removed boolean, rolling_period_start_unix long, seq long",
+    )
+    batch, acc = _counted(spark, flags, "wallet_id", "string")
+    serving.flags_sink()(batch, 0)
+    assert acc.value == flags.count()
+    assert serving.check("w1")["above_threshold"] is True
+    assert serving.check("w1")["balance"] == pytest.approx(1.0)
+
+
+def test_merge_writes_one_file_per_dirty_bucket(spark, tmp_path):
+    """Each dirty bucket is swapped in as a single parquet file (plus its
+    epoch marker), not one file per write task.  Partition coalescing is
+    off so the tiny batches still spread over every shuffle partition, as
+    a large batch would."""
+    serving = ServingTables(spark, str(tmp_path / "serving"))
+    sink = serving.balance_sink()
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        sink(_mk_batch(spark, [(f"w{i}", 1.0, i) for i in range(200)]), 0)
+        sink(_mk_batch(spark, [(f"w{i}", 2.0, 200 + i) for i in range(0, 200, 7)]), 1)
+    finally:
+        spark.conf.set(conf, prev)
+    state = _bucket_state(serving.root, "balance")
+    assert len(state) == N_BUCKETS  # 200 wallets dirty every bucket
+    for bkt, (files, _) in state.items():
+        parts = [f for f in files if f.startswith("part-")]
+        assert len(parts) == 1, f"{bkt}: {files}"
+        assert "_epoch" in files
+    assert serving.check("w7")["balance"] == pytest.approx(3.0)
+
+
+def test_read_leaves_writer_tmp_dir_alone(spark, tmp_path):
+    """A reader must not repair the writer's directory: the writer's
+    in-flight ``.<name>.<uuid>`` temp dir survives a ``check()``."""
+    import uuid as _uuid
+
+    serving = ServingTables(spark, str(tmp_path / "serving"))
+    serving.balance_sink()(_mk_batch(spark, [("a", 7.0, 1)]), 0)
+    in_flight = os.path.join(serving.root, f".balance.{_uuid.uuid4().hex}")
+    os.makedirs(in_flight)
+    assert serving.check("a")["balance"] == pytest.approx(7.0)
+    assert os.path.isdir(in_flight)

@@ -537,3 +537,38 @@ def test_resample_interp_agrees_with_ffill_on_observed(spark):
     n = j.count()
     assert n == fi.count()
     assert j.filter(F.col("value_interp") != F.col("value_ffill")).count() == 0
+
+
+def test_user_sessions_gap_is_exact_to_the_microsecond(spark, tmp_path):
+    """The 1,800 s session gap compares exact microseconds, as the
+    oracle's fractional ``epoch()`` does: 1,800.4 s opens a new session
+    (whole-second truncation read it as 1,800 s), 1,799.6 s does not."""
+    import duckdb
+
+    from depositaja_spark.registry import ORACLES, QUERIES
+
+    us = 1_000_000
+    rows = [
+        (0, 1_000 * us, 1),
+        (1, 2_800 * us + 400_000, 1),  # gap 1,800.4 s
+        (2, 1_000 * us + 500_000, 2),
+        (3, 2_800 * us + 100_000, 2),  # gap 1,799.6 s
+    ]
+    spark.createDataFrame(
+        [(e, t, u, "view", 1.0, None) for e, t, u in rows],
+        "event_id long, t long, user_id long, event_type string, value double, props string",
+    ).select(
+        "event_id", F.timestamp_micros("t").alias("ts"),
+        "user_id", "event_type", "value", "props",
+    ).coalesce(1).write.parquet(f"{tmp_path}/events.parquet")
+
+    got = {
+        r.user_id: r.n_sessions
+        for r in QUERIES["user_sessions"](spark, str(tmp_path)).collect()
+    }
+    assert got == {1: 2, 2: 1}
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet/*.parquet'")
+    assert dict(con.execute(
+        f"SELECT user_id, n_sessions FROM ({ORACLES['user_sessions']})"
+    ).fetchall()) == got
